@@ -53,24 +53,6 @@ object BenchExtra {
       "dup_spans_full" -> { s =>
         graft.ops.Dedup.duplicateSpans(docs(s), k = 8, hashFamily = "xxhash64")
       },
-      // ---- x_extract_relational decomposition -------------------------
-      "xrel_parse" -> { s =>
-        graft.pipeline.ExtractRelational.parse(
-          graft.io.SyntheticCorpus.docsForSfDir(s, sfDir))
-          .select("doc_id")
-      },
-      "xrel_parse_full_row" -> { s => // parse incl. materializing the nested rows
-        graft.pipeline.ExtractRelational.parse(
-          graft.io.SyntheticCorpus.docsForSfDir(s, sfDir)).toDF()
-      },
-      "xrel_persist" -> { s =>
-        graft.pipeline.ExtractRelational.spans(
-          graft.io.SyntheticCorpus.docsForSfDir(s, sfDir)).toDF()
-      },
-      "xrel_nopersist" -> { s =>
-        graft.pipeline.ExtractRelational.spans(
-          graft.io.SyntheticCorpus.docsForSfDir(s, sfDir), persistParsed = false).toDF()
-      },
       // ---- q_lsh_* decomposition --------------------------------------
       "lsh_sigs_md5" -> { s =>
         graft.ops.Dedup.minhashSignatures(docs(s), bands = 8, shingleK = 8)

@@ -62,17 +62,8 @@ object SparkEntry {
       val d = Extract.run(SyntheticCorpus.docsForSfDir(s, dir)).toDF()
       d.select(col("doc_id"), col("n_pages"), col("span_count"), col("char_count"))
     }),
-    // persistParsed=false (r7): the scaladoc's own cost model — persist
-    // trades a cached-materialization of the parsed corpus against a
-    // second parse. For THIS input the parse is a cheap deterministic
-    // generator pass (BenchExtra sf0.1: parse 0.29s; building+reading
-    // the nested-row cache 0.5s), so recompute wins at every tier of the
-    // synthetic corpus; a production corpus with an expensive parse
-    // keeps the default true. Output identical either way (spec-pinned
-    // fused==relational equivalence + unchanged x_ digest).
     "x_extract_relational" -> ((s, dir) =>
-      graft.pipeline.ExtractRelational.spans(SyntheticCorpus.docsForSfDir(s, dir),
-        persistParsed = false).toDF()),
+      graft.pipeline.ExtractRelational.spans(SyntheticCorpus.docsForSfDir(s, dir)).toDF()),
     "x_rover_vote" -> ((s, dir) => roverQuery(s, dir)),
     "x_reading_order" -> ((s, dir) => readingOrderQuery(s, dir)),
     "x_phash_dedup" -> ((s, dir) => phashQuery(s, dir)),

@@ -2,7 +2,7 @@ package graft.analyze
 
 import java.util.regex.Pattern
 import scala.collection.mutable
-import graft.model.{Heading, HeadingAnalysis}
+import graft.model.{Heading, HeadingAnalysis, ParsedPage}
 import graft.text.Normalize
 
 /** Heading frequency analysis + running-head (boilerplate) detection +
@@ -95,18 +95,29 @@ object Headings {
     else heading
   }
 
-  /** apply_read_aloud_rules (analyzer.py:212-271): running-head set and
-    * exclusion patterns force readAloud=false. */
+  /** The running-head set (normalized texts) of one document:
+    * analyze_headings over every page's headings + detect_running_head
+    * (cli.py:137-196). */
+  def runningHeads(pages: Seq[ParsedPage], thresholdRatio: Double = 0.5): Set[String] = {
+    val headings = pages.flatMap(_.elements).collect { case h: Heading => h }
+    detectRunningHead(analyze(headings), pages.length, thresholdRatio)
+      .iterator.filter(_.isRunningHead).map(_.text).toSet
+  }
+
+  /** The heading read-aloud rule of apply_read_aloud_rules
+    * (analyzer.py:212-271): a heading whose normalized text is a running
+    * head, or that matches an exclusion pattern, is never read aloud. */
+  def suppressesReadAloud(text: String, runningHeads: Set[String]): Boolean =
+    runningHeads.contains(Normalize.dashes(text)) || matchExclusionPattern(text).isDefined
+
+  /** apply_read_aloud_rules (analyzer.py:212-271) over whole headings. */
   def applyReadAloudRules(
       headings: Seq[Heading],
       analyses: Vector[HeadingAnalysis]
   ): Vector[Heading] = {
-    if (headings.isEmpty) return Vector.empty
     val runningHeadTexts = analyses.iterator.filter(_.isRunningHead).map(_.text).toSet
     headings.iterator.map { h =>
-      val excluded = runningHeadTexts.contains(Normalize.dashes(h.text)) ||
-        matchExclusionPattern(h.text).isDefined
-      if (excluded) Heading(h.level, h.text, readAloud = false) else h
+      if (suppressesReadAloud(h.text, runningHeadTexts)) h.copy(readAloud = false) else h
     }.toVector
   }
 }

@@ -124,8 +124,18 @@ object Dedup {
     * identical at gate tiers. Spill-safe: the sort is ExternalSorter.
     * Row equality is Spark's value-based [[org.apache.spark.sql.Row]]
     * equals (null-safe; binary-aware), matching distinct's grouping for
-    * every atomic column type the pair streams carry. */
+    * every atomic column type the pair streams carry. Floating columns
+    * are rejected (distinct normalizes NaN and -0.0, Row equality does
+    * not), and so are arrays, maps and structs. */
   private[graft] def sortedDistinct(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types._
+    val unsupported = df.schema.fields.filterNot(_.dataType match {
+      case BooleanType | ByteType | ShortType | IntegerType | LongType | StringType |
+          BinaryType | DateType | TimestampType | TimestampNTZType | _: DecimalType => true
+      case _ => false
+    })
+    require(unsupported.isEmpty, "sortedDistinct needs non-floating atomic columns, got " +
+      unsupported.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", "))
     val cols = df.columns.map(col).toIndexedSeq
     val sorted = df.repartition(cols: _*).sortWithinPartitions(cols: _*)
     val enc = org.apache.spark.sql.Encoders.row(sorted.schema)
@@ -208,6 +218,9 @@ object Dedup {
   def minhashSignatures(docs: DataFrame, bands: Int = 8, shingleK: Int = 5,
       idCol: String = "doc_id", textCol: String = "text",
       hashFamily: String = "md5", spread: Boolean = true): DataFrame = {
+    // HARD OPERATING LIMIT: "xxhash64" is only used up to ~5e9 distinct
+    // shingle windows (64-bit birthday bound: expected colliding pairs
+    // stay below one); beyond that envelope pass "md5".
     require(hashFamily == "md5" || hashFamily == "xxhash64",
       s"hashFamily must be 'md5' or 'xxhash64', got '$hashFamily'")
     // compute-heavy map stage (docs x shingles x bands hash calls): spread
@@ -503,6 +516,10 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       hashFamily: String = "md5", spread: Boolean = true): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    // HARD OPERATING LIMIT: "xxhash64" is only used up to ~5e9 distinct
+    // k-char windows (64-bit birthday bound: expected colliding pairs
+    // stay below one; past it spurious shared windows cut real text in
+    // the coverage/cut consumers); beyond that envelope pass "md5".
     require(hashFamily == "md5" || hashFamily == "xxhash64",
       s"hashFamily must be 'md5' or 'xxhash64', got '$hashFamily'")
     // compute-heavy map stage (a hash per character of the corpus):

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import scala.collection.mutable
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.model._
 import graft.analyze.Headings
@@ -35,22 +34,20 @@ object Extract {
   def extractLines(docId: String, lines: IndexedSeq[String],
       runningHeadThreshold: Double = 0.5): DocResult = {
     val parsed = PageParser.parseDocument(lines)
+    // convert_book (cli.py:137-196): the running head is detected in-row
+    emit(docId, parsed, Headings.runningHeads(parsed.pages, runningHeadThreshold))
+  }
 
-    // convert_book (cli.py:137-196): analyze all headings across pages,
-    // detect running head, rewrite read_aloud.
-    val allHeadings: Vector[Heading] = parsed.pages.flatMap(_.elements).collect {
-      case h: Heading => h
-    }
-    val analyses0 = Headings.analyze(allHeadings)
-    val analyses = Headings.detectRunningHead(analyses0, parsed.pages.length, runningHeadThreshold)
-    val processed = Headings.applyReadAloudRules(allHeadings, analyses)
-    // original heading identity -> processed (cli.py:103-135 heading_map)
-    val processedIter = processed.iterator
-
+  /** The one span emitter, shared with [[ExtractRelational]]: reference
+    * order toc -> per page (page, announcement, elements, figures,
+    * pagemeta) (transformer.py:307-338), heading read-aloud decided by
+    * [[Headings.suppressesReadAloud]] against the doc's running heads. */
+  private[pipeline] def emit(docId: String, parsed: PageParser.ParseOutput,
+      runningHeads: Set[String]): DocResult = {
     val spans = Vector.newBuilder[OutSpan]
     var offset = 0
     var charCount = 0L
-    def emit(kind: String, text: String, mediaRef: String, pageNo: String, level: Int,
+    def span(kind: String, text: String, mediaRef: String, pageNo: String, level: Int,
         readAloud: Boolean, attrs: String): Unit = {
       spans += OutSpan(docId, offset, kind, text, mediaRef, pageNo, level, readAloud, attrs)
       offset += 1
@@ -59,34 +56,34 @@ object Extract {
 
     // Book-level TOC first (xml_builder.py:44-48 puts <toc> before pages).
     parsed.tocEntries.foreach { e =>
-      emit("toc", e.text, "", e.page, e.level, readAloud = true,
+      span("toc", e.text, "", e.page, e.level, readAloud = true,
         attrs = if (e.number.nonEmpty) s"number=${e.number}" else "")
     }
 
     parsed.pages.foreach { page =>
-      emit("page", page.number, "", page.number, 0, readAloud = false,
+      span("page", page.number, "", page.number, 0, readAloud = false,
         attrs = s"sourceFile=${page.sourceFile}")
       // pageAnnouncement is the FIRST child of each <page> in the live path
       // (page.py:119-133 create_page_announcement "Nページ" format=simple,
       // transformer.py:318-321; None when the page number is empty)
       if (page.number.nonEmpty)
-        emit("announcement", s"${page.number}ページ", "", page.number, 0, readAloud = false,
+        span("announcement", s"${page.number}ページ", "", page.number, 0, readAloud = false,
           attrs = "format=simple")
       page.elements.foreach {
         case h: Heading =>
-          val ph = processedIter.next() // same order as _extract_headings
-          emit("heading", ph.text, "", page.number, ph.level, ph.readAloud, "")
+          span("heading", h.text, "", page.number, h.level,
+            h.readAloud && !Headings.suppressesReadAloud(h.text, runningHeads), "")
         case p: Paragraph =>
-          emit("paragraph", p.text, "", page.number, 0, p.readAloud, "")
+          span("paragraph", p.text, "", page.number, 0, p.readAloud, "")
         case l: ListEl =>
-          emit("list", l.items.mkString("\n"), "", page.number, 0, l.readAloud,
+          span("list", l.items.mkString("\n"), "", page.number, 0, l.readAloud,
             attrs = s"listType=${l.listType}")
       }
       page.figures.foreach { f =>
-        emit("figure", f.caption, f.path, page.number, 0, readAloud = false, "")
+        span("figure", f.caption, f.path, page.number, 0, readAloud = false, "")
       }
       page.metadata.foreach { m =>
-        emit("pagemeta", m.text, "", page.number, 0, readAloud = false,
+        span("pagemeta", m.text, "", page.number, 0, readAloud = false,
           attrs = s"metaType=${m.metaType}")
       }
     }

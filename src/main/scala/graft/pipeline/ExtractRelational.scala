@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model._
-import graft.analyze.Headings
 import graft.parse.PageParser
 
 /** Relational variant of the boilerplate (running-head) aggregation — the
@@ -18,82 +17,33 @@ import graft.parse.PageParser
   * IDENTICAL span sequences (tested).
   *
   * Plan shape at 100 TB: Stage A narrow parse -> Stage B shuffle
-  * (partial-agg'd heading counts, AQE skew-split) -> Stage C broadcast of
-  * the tiny running-head set -> Stage D narrow emission. One shuffle of
-  * (doc, heading) pairs — heading rows are ~1% of span rows.
+  * (partial-agg'd heading counts, AQE skew-split) -> Stage C join of the
+  * tiny running-head set -> Stage D narrow re-parse + emission through
+  * the same emitter as the fused path. One shuffle of (doc, heading)
+  * pairs — heading rows are ~1% of span rows.
   */
 object ExtractRelational {
 
-  // Encoder-friendly flattened page model (no ADTs).
-  final case class FlatElement(kind: String, text: String, level: Int, readAloud: Boolean,
-      items: Seq[String], listType: String)
-  final case class FlatPage(number: String, sourceFile: String, elements: Seq[FlatElement],
-      figPaths: Seq[String], figCaptions: Seq[String],
-      metaText: String, metaType: String, hasMeta: Boolean)
-  final case class ParsedDoc(doc_id: String, pages: Seq[FlatPage], errors: Seq[ConvError],
-      tocText: Seq[String], tocLevel: Seq[Int], tocNumber: Seq[String], tocPage: Seq[String])
-  final case class HeadingRow(doc_id: String, norm_text: String, level: Int)
-  final case class RunningHead(doc_id: String, norm_text: String)
+  private def parse(doc: InputDoc): PageParser.ParseOutput =
+    PageParser.parseDocument(doc.spans.sortBy(_.offset).map(_.text).toIndexedSeq)
 
-  private def flatten(e: Element): FlatElement = e match {
-    case Heading(l, t, ra)   => FlatElement("heading", t, l, ra, Nil, "")
-    case Paragraph(t, ra)    => FlatElement("paragraph", t, 0, ra, Nil, "")
-    case ListEl(items, lt, ra) => FlatElement("list", "", 0, ra, items, lt)
-  }
-
-  /** Per-doc parse as a plain function — shared by the encoder-backed
-    * [[parse]] Dataset stage and the fused no-persist passes in
-    * [[spans]] (which keep the ParsedDoc as a JVM object and never pay
-    * the nested-row encoder round trip). */
-  private[pipeline] def parseOne(doc: InputDoc): ParsedDoc = {
-    val lines = doc.spans.sortBy(_.offset).map(_.text).toIndexedSeq
-    val out = PageParser.parseDocument(lines)
-    ParsedDoc(
-      doc.doc_id,
-      out.pages.map(p => FlatPage(p.number, p.sourceFile, p.elements.map(flatten),
-        p.figures.map(_.path), p.figures.map(_.caption),
-        p.metadata.map(_.text).getOrElse(""), p.metadata.map(_.metaType).getOrElse(""),
-        p.metadata.isDefined)),
-      out.errors,
-      out.tocEntries.map(_.text), out.tocEntries.map(_.level),
-      out.tocEntries.map(_.number), out.tocEntries.map(_.page)
-    )
-  }
-
-  /** Stage A: per-doc parse (narrow, one pass). */
-  def parse(docs: Dataset[InputDoc]): Dataset[ParsedDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.mapPartitions(_.map(parseOne))
-  }
-
-  /** The (doc_id, normalized text, level, seq, n_pages) heading rows a
-    * ParsedDoc contributes to the running-head aggregation — one
-    * definition so the encoder-backed and fused paths cannot drift. */
-  private def headingRows(d: ParsedDoc): Seq[(String, String, Int, Long, Int)] =
-    d.pages.flatMap(_.elements).collect { case e if e.kind == "heading" => e }
-      .zipWithIndex.map { case (e, i) =>
-        (d.doc_id, graft.text.Normalize.dashes(e.text), e.level, i.toLong, d.pages.length)
+  /** The (doc_id, normalized text, level, seq, n_pages) heading rows one
+    * parsed doc contributes to the running-head aggregation. */
+  private def headingRows(docId: String, parsed: PageParser.ParseOutput)
+      : Seq[(String, String, Int, Long, Int)] =
+    parsed.pages.flatMap(_.elements).collect { case h: Heading => h }
+      .zipWithIndex.map { case (h, i) =>
+        (docId, graft.text.Normalize.dashes(h.text), h.level, i.toLong, parsed.pages.length)
       }
 
-  /** Stage B+C: the wide running-head aggregation. Returns (doc_id,
-    * norm_text) rows for detected running heads.
+  /** The relational running-head aggregation over already-extracted
+    * heading rows (doc_id, norm_text, level, seq, n_pages). Returns
+    * (doc_id, norm_text) rows for detected running heads.
     *
     * Faithful to analyzer.py:41-151: per (doc, normalized text) count +
     * most-frequent level (ties -> smaller); candidate = level-1 rows; the
     * doc's most frequent candidate (first-seen tie-break via min heading
     * index) is flagged iff count >= max(pages * threshold, 2). */
-  def runningHeads(parsed: Dataset[ParsedDoc], thresholdRatio: Double = 0.5): DataFrame = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-
-    val headings = parsed.flatMap(headingRows _)
-      .toDF("doc_id", "norm_text", "level", "seq", "n_pages")
-    runningHeadsFromRows(headings, thresholdRatio)
-  }
-
-  /** The relational running-head aggregation over already-extracted
-    * heading rows (doc_id, norm_text, level, seq, n_pages). */
   private def runningHeadsFromRows(headingRows: DataFrame,
       thresholdRatio: Double): DataFrame = {
     val spark = headingRows.sparkSession
@@ -134,136 +84,38 @@ object ExtractRelational {
       .select($"doc_id", $"norm_text")
   }
 
-  /** Stage D: emit spans, applying running-head + exclusion read-aloud
-    * rules with the joined filter set.
+  /** Full relational pipeline, two fused passes over `docs`:
     *
-    * Join strategy is left to AQE on purpose: rhSets is ≤1 tiny row per
-    * doc — at test scale AQE broadcasts it (verified in PLANS.md); at
+    *  1. parse each doc and emit its heading rows straight into the
+    *     relational running-head aggregation (Stage A+B+C);
+    *  2. join the tiny per-doc running-head sets back onto `docs`, parse
+    *     each doc AGAIN and hand it to the shared emitter [[Extract.emit]]
+    *     (Stage D).
+    *
+    * Each parse stays a plain JVM object inside its own mapPartitions:
+    * the deeply nested parse output is never encoded into rows, and no
+    * cache is held between the passes. Parsing twice costs no more than
+    * caching one parse, even on the expensive-parse corpus (perfbench
+    * `extract_longdoc_rel`: same docs/s, a third less live heap).
+    *
+    * DETERMINISM: both passes must parse the same input the same way.
+    * `docs` must be a deterministic source (a table scan, not a sampled
+    * or nondeterministic plan) and the parse is a pure function of the
+    * doc's lines; otherwise the running-head set and the emitted spans
+    * could derive from different parses.
+    *
+    * Join strategy is left to AQE on purpose: the running-head sets are
+    * at most one tiny row per doc — at test scale AQE broadcasts them; at
     * 10^12 docs a forced broadcast would collect a corpus-sized set on
     * every executor, so the planner must be free to fall back to a
-    * shuffled join keyed on doc_id. */
-  def emit(parsed: Dataset[ParsedDoc], runningHeadSet: DataFrame): Dataset[OutSpan] = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    val rhSets = runningHeadSet
-      .groupBy($"doc_id").agg(collect_set($"norm_text").as("rh"))
-    val joined = parsed
-      .joinWith(rhSets, parsed("doc_id") === rhSets("doc_id"), "left_outer")
-    joined.mapPartitions(_.flatMap { case (d, rhRow) =>
-      val rh: Set[String] =
-        if (rhRow == null) Set.empty
-        else rhRow.getAs[scala.collection.Seq[String]]("rh").toSet
-      emitDoc(d, rh)
-    })
-  }
-
-  private[pipeline] def emitDoc(d: ParsedDoc, runningHeads: Set[String]): Vector[OutSpan] = {
-    val spans = Vector.newBuilder[OutSpan]
-    var offset = 0
-    def emit(kind: String, text: String, mediaRef: String, pageNo: String, level: Int,
-        readAloud: Boolean, attrs: String): Unit = {
-      spans += OutSpan(d.doc_id, offset, kind, text, mediaRef, pageNo, level, readAloud, attrs)
-      offset += 1
-    }
-    d.tocText.indices.foreach { i =>
-      emit("toc", d.tocText(i), "", d.tocPage(i), d.tocLevel(i), readAloud = true,
-        attrs = if (d.tocNumber(i).nonEmpty) s"number=${d.tocNumber(i)}" else "")
-    }
-    d.pages.foreach { page =>
-      emit("page", page.number, "", page.number, 0, readAloud = false,
-        attrs = s"sourceFile=${page.sourceFile}")
-      // announcement-first inside each page (transformer.py:318-321)
-      if (page.number.nonEmpty)
-        emit("announcement", s"${page.number}ページ", "", page.number, 0, readAloud = false,
-          attrs = "format=simple")
-      page.elements.foreach { e =>
-        e.kind match {
-          case "heading" =>
-            val excluded = runningHeads.contains(graft.text.Normalize.dashes(e.text)) ||
-              Headings.matchExclusionPattern(e.text).isDefined
-            emit("heading", e.text, "", page.number, e.level,
-              if (excluded) false else e.readAloud, "")
-          case "paragraph" =>
-            emit("paragraph", e.text, "", page.number, 0, e.readAloud, "")
-          case "list" =>
-            emit("list", e.items.mkString("\n"), "", page.number, 0, e.readAloud,
-              attrs = s"listType=${e.listType}")
-        }
-      }
-      page.figPaths.indices.foreach { i =>
-        emit("figure", page.figCaptions(i), page.figPaths(i), page.number, 0, readAloud = false, "")
-      }
-      if (page.hasMeta)
-        emit("pagemeta", page.metaText, "", page.number, 0, readAloud = false,
-          attrs = s"metaType=${page.metaType}")
-    }
-    spans.result()
-  }
-
-  // Dataset caches are held strongly by the CacheManager (the context
-  // cleaner does NOT reap them), so a persist with no unpersist path
-  // would leak one input-sized cache per spans() call in a long-lived
-  // session (e.g. Bench). spans() keeps at most ONE live cache: each
-  // call releases the previous invocation's. SINGLE-FLIGHT assumption:
-  // interleaving two persistParsed spans() plans and executing the
-  // FIRST one later is still correct (unpersist never breaks lineage)
-  // but recomputes its parse twice — pass persistParsed = false for
-  // that pattern, or execute each result before building the next.
-  @volatile private var lastPersisted: Option[Dataset[ParsedDoc]] = None
-
-  /** Full relational pipeline. `parsed` feeds BOTH the running-head
-    * aggregation and the emission; the two modes trade differently:
+    * shuffled join keyed on doc_id.
     *
-    *  - persistParsed = true (default): parse ONCE, persist the
-    *    ParsedDoc dataset (serialized, spills to disk), both branches
-    *    read the cache. Right when the parse dominates (real OCR-page
-    *    corpora at scale) — the price is the nested-row encoder round
-    *    trip into and out of the columnar cache on every branch.
-    *  - persistParsed = false: parse TWICE, but FUSED — each branch
-    *    calls [[parseOne]] inside its own mapPartitions and keeps the
-    *    ParsedDoc as a plain JVM object, so the deeply-nested rows are
-    *    never encoded at all (the r7 BenchExtra measurement: the cache
-    *    round trip cost ~2x the parse itself on the gate corpus, and
-    *    the pre-fusion no-persist path still paid TWO encoder round
-    *    trips per branch — mapPartitions out, flatMap/joinWith in).
-    *    Right when the parse is cheap relative to row width.
-    *
-    * Output is identical in both modes (and to the fused [[Extract]] —
-    * the equivalence spec pins all of them). */
-  def spans(docs: Dataset[InputDoc], thresholdRatio: Double = 0.5,
-      persistParsed: Boolean = true): Dataset[OutSpan] = {
-    if (!persistParsed) return spansFused(docs, thresholdRatio)
-    val parsed0 = parse(docs)
-    val parsed = {
-        val p = parsed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        synchronized {
-          // the previous cache may belong to a STOPPED SparkContext (a
-          // new session after restart): it died with its executors —
-          // attempting RPC to release it would NPE, and there is nothing
-          // left to release
-          lastPersisted.foreach { prev =>
-            try {
-              if (!prev.sparkSession.sparkContext.isStopped)
-                prev.unpersist(blocking = false)
-            } catch { case scala.util.control.NonFatal(_) => () }
-          }
-          lastPersisted = Some(p)
-        }
-        p
-      }
-    emit(parsed, runningHeads(parsed, thresholdRatio))
-  }
-
-  /** The no-persist composition: running-head aggregation over heading
-    * rows emitted straight from a fused parse (Stage A+headings in one
-    * narrow pass), then a second fused parse+emit joined with the tiny
-    * running-head sets. Same relational Stage B/C plan as [[emit]] /
-    * [[runningHeads]] — only the ParsedDoc encoder round trips are
-    * gone. */
-  private def spansFused(docs: Dataset[InputDoc], thresholdRatio: Double): Dataset[OutSpan] = {
+    * Output is identical to the fused [[Extract]] (spec-pinned under the
+    * default plan and a banned-broadcast SortMergeJoin plan). */
+  def spans(docs: Dataset[InputDoc], thresholdRatio: Double = 0.5): Dataset[OutSpan] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val headings = docs.mapPartitions(_.flatMap(d => headingRows(parseOne(d))))
+    val headings = docs.mapPartitions(_.flatMap(d => headingRows(d.doc_id, parse(d))))
       .toDF("doc_id", "norm_text", "level", "seq", "n_pages")
     val rhSets = runningHeadsFromRows(headings, thresholdRatio)
       .groupBy($"doc_id").agg(collect_set($"norm_text").as("rh"))
@@ -273,7 +125,7 @@ object ExtractRelational {
       val rh: Set[String] =
         if (rhRow == null) Set.empty
         else rhRow.getAs[scala.collection.Seq[String]]("rh").toSet
-      emitDoc(parseOne(d), rh)
+      Extract.emit(d.doc_id, parse(d), rh).spans
     })
   }
 }

@@ -101,11 +101,12 @@ object XmlBuilder {
 
   // ---- legacy transform_page family (transformer.py:305-407) ---------------
 
-  /** `contentReadAloud` is computed at PARSE time from the original
-    * elements (page.py:654-656) and preserved through heading processing
-    * (cli.py:126 `read_aloud=page.content.read_aloud`) — running-head
-    * demotion flips heading attrs but NOT the content wrapper. */
-  private def transformPage(page: ParsedPage, contentReadAloud: Boolean): El = {
+  /** The content wrapper's readAloud is computed at PARSE time from the
+    * original elements (page.py:654-656) and preserved through heading
+    * processing (cli.py:126 `read_aloud=page.content.read_aloud`) —
+    * running-head demotion ([[Headings.suppressesReadAloud]]) flips
+    * heading attrs but NOT the content wrapper. */
+  private def transformPage(page: ParsedPage, runningHeads: Set[String]): El = {
     val elem = new El("page")
     elem.set("number", page.number)
     elem.set("sourceFile", page.sourceFile)
@@ -120,7 +121,7 @@ object XmlBuilder {
     }
     if (page.elements.nonEmpty) {
       val content = new El("content")
-      content.set("readAloud", if (contentReadAloud) "true" else "false")
+      content.set("readAloud", if (page.elements.exists(_.readAloud)) "true" else "false")
       page.elements.foreach {
         case Paragraph(t, ra) =>
           val p = new El("paragraph")
@@ -130,7 +131,8 @@ object XmlBuilder {
         case Heading(level, t, ra) =>
           val h = new El("heading")
           h.set("level", level.toString)
-          h.set("readAloud", if (ra) "true" else "false")
+          h.set("readAloud",
+            if (ra && !Headings.suppressesReadAloud(t, runningHeads)) "true" else "false")
           applyEmphasis(t, h)
           content.append(h)
         case ListEl(items, _, ra) =>
@@ -195,18 +197,7 @@ object XmlBuilder {
   def buildBookTree(doc: InputDoc, runningHeadThreshold: Double = 0.5): El = {
     val lines = doc.spans.sortBy(_.offset).map(_.text).toIndexedSeq
     val parsed = PageParser.parseDocument(lines)
-    val allHeadings = parsed.pages.flatMap(_.elements).collect { case h: Heading => h }
-    val analyses = Headings.detectRunningHead(
-      Headings.analyze(allHeadings), parsed.pages.length, runningHeadThreshold)
-    val processed = Headings.applyReadAloudRules(allHeadings, analyses)
-    val it = processed.iterator
-    val pages = parsed.pages.map { p =>
-      val origRa = p.elements.exists(_.readAloud) // pre-rule content flag
-      (p.copy(elements = p.elements.map {
-        case _: Heading => it.next()
-        case e          => e
-      }), origRa)
-    }
+    val runningHeads = Headings.runningHeads(parsed.pages, runningHeadThreshold)
 
     val root = new El("book")
     val metadata = new El("metadata")
@@ -221,8 +212,8 @@ object XmlBuilder {
     parsed.errors.foreach(e =>
       pageErrors.getOrElseUpdate(e.page_number, mutable.ArrayBuffer.empty) += e)
 
-    pages.foreach { case (page, contentRa) =>
-      val pe = transformPage(page, contentRa)
+    parsed.pages.foreach { page =>
+      val pe = transformPage(page, runningHeads)
       pageErrors.get(page.number).foreach(_.foreach { e =>
         pe.append(CommentNode(s" ERROR: ${e.error_type} - ${e.message} "))
       })

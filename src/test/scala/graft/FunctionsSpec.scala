@@ -155,7 +155,9 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     for ((family, h) <- Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
         ("md5", md5), ("xxhash64", c => xxhash64(c)));
-        (bands, k) <- Seq((8, 8), (4, 5), (1, 3), (3, 1))) {
+        // (12, 4): multi-digit band prefixes ("10:") and the kernel's
+        // right-aligned mixed-length prefix patching
+        (bands, k) <- Seq((8, 8), (4, 5), (1, 3), (3, 1), (12, 4))) {
       // the pre-r7 relational shape, verbatim
       val relational = docs
         .select(col("doc_id"),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import graft.analyze.Headings
 import graft.io.SyntheticCorpus
 import graft.pipeline.{Checkpoint, Extract, ExtractRelational}
 
@@ -30,11 +31,41 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   private def corpus(n: Long, parts: Int = 4) = SyntheticCorpus.docs(spark, n, partitions = parts)
 
   test("fused and relational extraction emit identical span sequences") {
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import graft.model.OutSpan
     val docs = corpus(40)
-    val fused = Extract.spans(docs).toDF()
-    val relational = ExtractRelational.spans(docs).toDF()
-    assert(fused.count() == relational.count())
-    assert(fused.except(relational).isEmpty && relational.except(fused).isEmpty)
+    def ordered(ds: Dataset[OutSpan]): Seq[OutSpan] =
+      ds.collect().toSeq.sortBy(s => (s.doc_id, s.offset))
+    val fused = ordered(Extract.spans(docs))
+
+    // non-vacuous: running-head suppression fires — some headings that
+    // are read aloud with running-head detection disabled are silenced
+    // by it, and none of them matches an exclusion pattern
+    val noRunningHeads = ordered(Extract.spans(docs, Double.PositiveInfinity))
+    assert(noRunningHeads.length == fused.length)
+    val silenced = fused.zip(noRunningHeads).collect {
+      case (a, b) if a.kind == "heading" && !a.read_aloud && b.read_aloud => a
+    }
+    assert(silenced.nonEmpty)
+    assert(silenced.forall(h => Headings.matchExclusionPattern(h.text).isEmpty))
+    assert(fused.exists(h => h.kind == "heading" && h.read_aloud))
+
+    assert(ordered(ExtractRelational.spans(docs)) == fused)
+
+    // banned broadcast: the running-head join plans as a SortMergeJoin
+    // and the output is still span-identical
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    try {
+      val smj = ExtractRelational.spans(docs)
+      assert(ordered(smj) == fused)
+      object Plan extends AdaptiveSparkPlanHelper
+      val plan = smj.queryExecution.executedPlan
+      assert(Plan.collect(plan) { case j: SortMergeJoinExec => j }.nonEmpty, plan.toString)
+      assert(Plan.collect(plan) { case j: BroadcastHashJoinExec => j }.isEmpty, plan.toString)
+    } finally spark.conf.unset(key)
   }
 
   test("extraction is parallelism-independent (4 vs 1 partitions)") {
@@ -349,6 +380,24 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val simA = graft.ops.Dedup.simhashPairs(a, maxDist = 16)
     val simB = graft.ops.Dedup.simhashPairs(b, maxDist = 16)
     assert(simA.except(simB).isEmpty && simB.except(simA).isEmpty)
+  }
+
+  test("sortedDistinct: == distinct on atomic keys; floating and nested columns fail fast") {
+    val ss = spark; import ss.implicits._
+    val pairs = Seq(("a", 1L), ("b", 2L), ("a", 1L), (null, 3L), (null, 3L)).toDF("k", "v")
+    val got = graft.ops.Dedup.sortedDistinct(pairs).as[(String, Long)].collect()
+    val want = pairs.distinct().as[(String, Long)].collect()
+    assert(got.length == want.length && got.toSet == want.toSet)
+    val rejected = Seq(
+      Seq((1L, 0.5)).toDF("id", "score"),
+      Seq((1L, 0.5f)).toDF("id", "score"),
+      Seq((1L, Seq(1, 2))).toDF("id", "xs"),
+      Seq((1L, Map("a" -> 1))).toDF("id", "m"),
+      Seq((1L, (1, "x"))).toDF("id", "s"))
+    rejected.foreach { df =>
+      val e = intercept[IllegalArgumentException](graft.ops.Dedup.sortedDistinct(df))
+      assert(e.getMessage.contains(df.columns(1)), e.getMessage)
+    }
   }
 
   test("minhash hash-family seam: full-overlap recall is family-independent") {
