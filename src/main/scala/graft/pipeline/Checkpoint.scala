@@ -1,8 +1,15 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.atomic.AtomicBoolean
+import scala.util.{Failure, Try}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.io.TableIO
 import graft.model.InputDoc
 
@@ -78,7 +85,9 @@ object Checkpoint {
       val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
       in.close()
       def field(k: String): Long =
-        s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong).getOrElse(0L)
+        s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).flatMap(_.group(1).toLongOption)
+          .getOrElse(throw new IllegalStateException(
+            s"manifest $p: field '$k' is missing or malformed"))
       BucketManifest(b, field("n_docs"), field("span_count"), field("char_count"),
         field("error_count"))
     }
@@ -90,32 +99,68 @@ object Checkpoint {
     *    bytes before the commit point, at the price of one extra full
     *    read of the OUTPUT per bucket.
     *  - [[MetricsObserve]]: metrics ride the write jobs as observe()
-    *    aggregates (zero extra scan); durability is validated by the
-    *    write protocol's own _SUCCESS marker plus a sampled 1-row
-    *    read-back probe of the span partition. Falls back to read-back
-    *    for a bucket whose observation did not deliver (an entirely
-    *    empty bucket under AQE — rare, and cheap to re-read by
-    *    definition) or whose committer wrote no _SUCCESS marker (e.g.
-    *    marksuccessfuljobs=false on object stores). */
+    *    aggregates (zero extra scan). Durability is checked on the driver
+    *    without a job: the committer's _SUCCESS markers, then the row
+    *    counts in the footers of every committed part file
+    *    ([[footerRowCount]]) must equal the observed span and error
+    *    counts. Falls back to read-back for a bucket whose observation did
+    *    not deliver (an entirely empty bucket under AQE — rare, and cheap
+    *    to re-read by definition) or whose committer wrote no _SUCCESS
+    *    marker (e.g. marksuccessfuljobs=false on object stores). */
   sealed trait MetricsMode
   case object MetricsReadBack extends MetricsMode
   case object MetricsObserve extends MetricsMode
 
+  /** Rows in the parquet part files directly under `dir`, summed from
+    * their footers on the driver (no Spark job). Hidden entries
+    * (`_SUCCESS`, `_temporary`, `.crc` files) are not part files. */
+  def footerRowCount(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(dir)
+    p.getFileSystem(conf).listStatus(p).iterator
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .map { s =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+  }
+
+  /** `explode` of the struct array `array` as flat columns after `keep`,
+    * in encoder order. explode makes the element struct nullable; the
+    * encoder's non-nullable fields are coalesced with zero so the parquet
+    * footer keeps them `required` (the output schema is the encoder's). */
+  private def explodeFields(results: DataFrame, array: String, keep: String*): DataFrame = {
+    val elem = results.schema(array).dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
+    val fields = elem.fields.toSeq.map { f =>
+      val c = col(s"e.${f.name}")
+      (if (f.nullable) c else coalesce(c, lit(0).cast(f.dataType))).as(f.name)
+    }
+    results.select(keep.map(col) :+ explode(col(array)).as("e"): _*)
+      .select(keep.map(col) ++ fields: _*)
+  }
+
   /** Extract one bucket's docs, write its span partition AND its
-    * conversion-error sidecar durably, then commit the manifest (metrics
+    * conversion-error sidecar, and return the manifest to commit (metrics
     * per `metricsMode` — both modes validate durability before the
     * commit point, at different read-amplification/assurance trades).
-    * Results are persisted for the two writes, then released. */
+    * The results are cached once for the two write jobs, which project
+    * them columnarly: spans as `explode(spans)`, errors as `doc_id` plus
+    * `explode(errors)` (a scan of two cached columns). */
   private def processBucket(bucketLines: Dataset[(String, Array[String], Array[Int])],
       b: Int, outDir: String, runningHeadThreshold: Double,
       metricsMode: MetricsMode): BucketManifest = {
     val spark = bucketLines.sparkSession
-    import spark.implicits._
-    val results = Extract.runLines(bucketLines, runningHeadThreshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val results = Extract.runLines(bucketLines, runningHeadThreshold).toDF()
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val path = s"$outDir/bucket=$b"
+      // underscore prefix: partition discovery over $outDir must keep
+      // seeing ONE consistent bucket=N layout (spark.read.parquet(outDir)
+      // is the downstream contract); _errors is metadata, like _commits
       val errPath = s"$outDir/_errors/bucket=$b"
+      val errors = explodeFields(results, "errors", "doc_id")
 
       def readBack(): BucketManifest = {
         val row = spark.read.parquet(path)
@@ -131,58 +176,46 @@ object Checkpoint {
 
       metricsMode match {
         case MetricsReadBack =>
-          results.flatMap(r => r.spans).write.mode(SaveMode.Overwrite).parquet(path)
-          // underscore prefix: partition discovery over $outDir must keep
-          // seeing ONE consistent bucket=N layout (spark.read.parquet(outDir)
-          // is the downstream contract); _errors is metadata, like _commits
-          results.flatMap(r => r.errors.map(e =>
-              (r.doc_id, e.error_type, e.message, e.page_number, e.line_number)))
-            .toDF("doc_id", "error_type", "message", "page_number", "line_number")
-            .write.mode(SaveMode.Overwrite).parquet(errPath)
+          explodeFields(results, "spans").write.mode(SaveMode.Overwrite).parquet(path)
+          errors.write.mode(SaveMode.Overwrite).parquet(errPath)
           readBack()
         case MetricsObserve =>
           // metrics ride the write jobs: n_docs counts docs that emit at
           // least one span (== the read-back count_distinct over spans)
-          val docsObs = org.apache.spark.sql.Observation()
-          val spansObs = org.apache.spark.sql.Observation()
-          results
-            .observe(docsObs,
-              sum(when(size(col("spans")) > 0, 1L).otherwise(0L)).as("n_docs"))
-            .flatMap(r => r.spans)
+          val docsObs = Observation()
+          val spansObs = Observation()
+          val errObs = Observation()
+          explodeFields(results.observe(docsObs,
+              sum(when(size(col("spans")) > 0, 1L).otherwise(0L)).as("n_docs")), "spans")
             .observe(spansObs, count(lit(1)).as("span_count"),
               sum(length(col("text"))).as("char_count"))
             .write.mode(SaveMode.Overwrite).parquet(path)
-          val errObs = org.apache.spark.sql.Observation()
-          results.flatMap(r => r.errors.map(e =>
-              (r.doc_id, e.error_type, e.message, e.page_number, e.line_number)))
-            .toDF("doc_id", "error_type", "message", "page_number", "line_number")
-            .observe(errObs, count(lit(1)).as("error_count"))
+          errors.observe(errObs, count(lit(1)).as("error_count"))
             .write.mode(SaveMode.Overwrite).parquet(errPath)
-          val span = docsObs.get
+          val docs = docsObs.get
           val spanAgg = spansObs.get
           val side = errObs.get
           val f = fs(spark, outDir)
-          // durability: the committer's own success marker + a sampled
-          // 1-row read of the durable bytes (O(1), not output-sized).
-          // A committer configured NOT to write markers (e.g.
-          // mapreduce.fileoutputcommitter.marksuccessfuljobs=false on
-          // object stores) must not brick the default mode: a missing
-          // marker falls back to the full read-back, which validates by
-          // reading the durable bytes themselves.
+          // A committer configured NOT to write markers must not brick
+          // the default mode: a missing marker falls back to the full
+          // read-back, which validates by reading the durable bytes.
           val markersOk = f.exists(new Path(path, "_SUCCESS")) &&
             f.exists(new Path(errPath, "_SUCCESS"))
-          if (!markersOk || span.isEmpty || spanAgg.isEmpty || side.isEmpty) readBack()
+          if (!markersOk || docs.isEmpty || spanAgg.isEmpty || side.isEmpty) readBack()
           else {
-            val spanCount = spanAgg("span_count").asInstanceOf[Long]
-            if (spanCount > 0)
-              require(spark.read.parquet(path).limit(1).count() == 1L,
-                s"durable span partition at $path is unreadable")
-            BucketManifest(b,
-              span("n_docs").asInstanceOf[Long],
-              spanCount,
+            val m = BucketManifest(b,
+              docs("n_docs").asInstanceOf[Long],
+              spanAgg("span_count").asInstanceOf[Long],
               Option(spanAgg("char_count")).collect { case l: java.lang.Long => l.toLong }
                 .getOrElse(0L),
               side("error_count").asInstanceOf[Long])
+            // durability: every committed part file's footer, exact counts
+            for ((dir, rows) <- Seq(path -> m.spanCount, errPath -> m.errorCount)) {
+              val durable = footerRowCount(spark, dir)
+              require(durable == rows,
+                s"durable parquet at $dir holds $durable rows, the write observed $rows")
+            }
+            m
           }
       }
     } finally results.unpersist()
@@ -199,20 +232,6 @@ object Checkpoint {
       : Dataset[(String, Array[String], Array[Int])] =
     TableIO.pruneLines(corpus.where(col("bucket") === b))
 
-  /** Process all uncommitted buckets of an ALREADY bucket-partitioned
-    * corpus (the TableIO layout / an Iceberg bucket(doc_id) table): each
-    * bucket is a pruned partition read over one shared file index.
-    *
-    * `parallelism` > 1 processes that many buckets CONCURRENTLY (Spark's
-    * scheduler interleaves their jobs): a single bucket's tail tasks no
-    * longer idle the cluster between jobs — the utilization fix for
-    * checkpoint granularity at many-bucket configs. Each bucket still
-    * commits atomically via its own manifest, so kill/rerun semantics
-    * are unchanged (buckets in flight at a crash simply lack manifests
-    * and are redone).
-    *
-    * `failAtBucket` injects a crash AFTER processing-but-before-commit of
-    * the given bucket (test hook for the kill/rerun invariant). */
   /** Bucket count present in a bucket(doc_id)-partitioned layout
     * (max bucket dir value + 1). The LAYOUT is ground truth: trusting a
     * caller's count against a table written with more buckets would
@@ -229,6 +248,27 @@ object Checkpoint {
     if (vals.isEmpty) None else Some(vals.max + 1)
   }
 
+  /** Process all uncommitted buckets of an ALREADY bucket-partitioned
+    * corpus (the TableIO layout / an Iceberg bucket(doc_id) table): each
+    * bucket is a pruned partition read over one shared file index.
+    *
+    * `parallelism` > 1 keeps that many buckets in flight (Spark's
+    * scheduler interleaves their jobs): a fixed pool of `parallelism`
+    * threads takes the next bucket as soon as one finishes, so no bucket
+    * waits for the slowest of a batch and one bucket's tail tasks do not
+    * idle the cluster. After the first failure no queued bucket starts;
+    * every started bucket is still awaited, so no writer outlives this
+    * call (a caller's immediate resume never races one on the same
+    * paths). Each bucket commits atomically via its own manifest, so
+    * kill/rerun semantics do not depend on `parallelism` (buckets in
+    * flight at a crash simply lack manifests and are redone).
+    * `parallelism` <= 1 is a plain sequential loop.
+    *
+    * Every job of bucket N carries the description `extract:bucket=N`;
+    * the caller's own job description is restored afterwards.
+    *
+    * `failAtBucket` injects a crash AFTER processing-but-before-commit of
+    * the given bucket (test hook for the kill/rerun invariant). */
   def runPartitioned(spark: SparkSession, corpusPath: String, outDir: String,
       cfg: TableIO.Cfg = TableIO.Cfg(), runningHeadThreshold: Double = 0.5,
       failAtBucket: Int = -1, parallelism: Int = 1,
@@ -239,31 +279,32 @@ object Checkpoint {
     val remaining = (0 until nBuckets).filterNot(done.contains)
 
     def one(b: Int): BucketManifest = {
-      val m = processBucket(bucketLines(corpus, b), b, outDir, runningHeadThreshold,
-        metricsMode)
-      if (b == failAtBucket)
-        throw new RuntimeException(s"injected failure before committing bucket $b")
-      writeManifest(spark, outDir, m)
-      m
+      val sc = spark.sparkContext
+      val callerDescription = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"extract:bucket=$b")
+      try {
+        val m = processBucket(bucketLines(corpus, b), b, outDir, runningHeadThreshold,
+          metricsMode)
+        if (b == failAtBucket)
+          throw new RuntimeException(s"injected failure before committing bucket $b")
+        writeManifest(spark, outDir, m)
+        m
+      } finally sc.setJobDescription(callerDescription) // null clears it
     }
 
     if (parallelism <= 1) remaining.map(one).toVector
     else {
-      // bounded batches with an await-ALL barrier per batch: on a failure
-      // no bucket task outlives this call, so a caller's immediate resume
-      // can never race an in-flight writer on the same bucket paths (the
-      // crash-injection spec exercises exactly that).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      val pool = Executors.newFixedThreadPool(parallelism)
+      val failed = new AtomicBoolean(false)
       try {
-        remaining.grouped(parallelism).flatMap { batch =>
-          val futures = batch.map(b => scala.concurrent.Future(one(b))(ec))
-          val results = futures.map(f =>
-            scala.util.Try(scala.concurrent.Await.result(f,
-              scala.concurrent.duration.Duration.Inf)))
-          results.collectFirst { case scala.util.Failure(e) => throw e }
-          results.collect { case scala.util.Success(m) => m }
-        }.toVector
+        val slots = remaining.map(b => pool.submit(new Callable[Option[BucketManifest]] {
+          def call(): Option[BucketManifest] =
+            if (failed.get) None
+            else try Some(one(b)) catch { case e: Throwable => failed.set(true); throw e }
+        }))
+        val results = slots.map(s => Try(s.get())) // awaits every bucket
+        results.collectFirst { case Failure(e: ExecutionException) => throw e.getCause }
+        results.flatMap(_.get).toVector
       } finally pool.shutdown()
     }
   }

@@ -156,6 +156,10 @@ class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       Checkpoint.run(docs, parDir, nBuckets = 8, failAtBucket = 5, parallelism = 3)
     }
     assert(!Checkpoint.committedBuckets(spark, parDir).contains(5))
+    // every started bucket was awaited: no writer left a _temporary behind
+    val leftovers = java.nio.file.Files.walk(java.nio.file.Paths.get(parDir))
+    try assert(!leftovers.anyMatch(_.getFileName.toString == "_temporary"))
+    finally leftovers.close()
     // resume in parallel completes the rest
     Checkpoint.run(docs, parDir, nBuckets = 8, parallelism = 3)
     assert(Checkpoint.committedBuckets(spark, parDir) == (0 until 8).toSet)
